@@ -1,12 +1,10 @@
-"""Single-pass multi-type linking.
+"""Entity linking: validation, routing and formatting for every type.
 
-`link_mentions` (candidates.py + format_stage.py) runs one plan per
-entity type — faithful to the reference's one-file-per-type CLI, but
-five plans mean five scans of the mention table, five codegen
-compiles, and five job submissions. At 10^12 documents the mention
-table is the big input; it must be scanned ONCE.
-
-This operator links a mixed-label mention table in one dataflow:
+This is the one implementation of the reference's routing ladder plus
+per-type formatter (`_format_response` + `default_format`, SURVEY.md
+§2.8). It links a mixed-label mention table in one dataflow — at
+10^12 documents the mention table is the big input and is scanned
+ONCE:
 - the xref dictionary is pre-aggregated ONCE into a per-source-curie
   map ns → (count, sorted candidate set) — ontology-bounded work,
 - one 1:1 broadcast map-join against the mention scan (the mention
@@ -15,8 +13,12 @@ This operator links a mixed-label mention table in one dataflow:
   map-lookup columns (when ladders over the handful of types —
   constant-folded per row).
 
-Semantics are EXACTLY the per-type pipeline's: the parity test
-asserts multi(union) == ∪_t per_type(t) row-for-row.
+Three steps: `validate` → `route` → `format_rows`. The one-type
+views stay thin: validate.validate_mentions is `validate`,
+candidates.generate_candidates is `route`, and pipeline.link_mentions
+is `link_mentions_multi` over one type with the label column
+overridden. The parity and fuzz suites compare these views against
+the pure-Python oracle (oracle.py).
 """
 
 from __future__ import annotations
@@ -29,6 +31,10 @@ from ontology_matcher_spark.ontology_types import (
     OntologyType,
     Strategy,
 )
+from ontology_matcher_spark.operators.format_stage import (
+    metadata_exprs,
+    metadata_table,
+)
 from ontology_matcher_spark.oracle import (
     R_BAD_FORMAT,
     R_BAD_PREFIX,
@@ -36,7 +42,6 @@ from ontology_matcher_spark.oracle import (
     R_NO_RESULTS,
     R_UNIQUE_MULTI,
 )
-from ontology_matcher_spark.schemas import FAILED_COLUMNS, FORMATTED_COLUMNS
 
 _RECORD_COLS = [
     "id", "name", "label", "resource", "description",
@@ -55,24 +60,21 @@ def _label_case(types: dict[str, OntologyType], fn) -> Column:
     return out
 
 
-def link_mentions_multi(
-    mentions: DataFrame,
-    xref_edges: DataFrame,
-    terms: DataFrame,
-    types: dict[str, OntologyType],
-    strategy: Strategy = Strategy.MIXTURE,
-) -> tuple[DataFrame, DataFrame]:
-    """Mixed-label mention table → (formatted, failed_formatted) in one
-    dataflow pass. Output equals the union of per-type link_mentions
-    runs restricted to each label."""
-    all_ns: list[str] = sorted({ns for t in types.values() for ns in t.choices})
+def validate(mentions: DataFrame, types: dict[str, OntologyType]) -> DataFrame:
+    """Label-conditional CURIE check (SURVEY.md §2.2 P1-P3): add
+    ``idx`` (when absent), ``ns``, ``local_id`` and ``format_reason``
+    (NULL = valid CURIE for the row's type).
 
-    # ---- validate (label-conditional CURIE check) --------------------
+    The reference aborts the whole run on any malformed id
+    (ontology_formatter.py:279-303); a distributed pipeline must not —
+    each row is tagged with a reason and routed. ``idx`` is
+    ``monotonically_increasing_id``: it preserves file order within
+    and across ordered splits, which is all first-row-wins needs."""
     df = mentions
     if "idx" not in df.columns:
         df = df.withColumn("idx", F.monotonically_increasing_id())
     has_colon = F.col("id").contains(":")
-    df = (
+    return (
         df.withColumn(
             "ns",
             F.when(has_colon, F.substring_index("id", ":", 1)).otherwise(F.lit("")),
@@ -98,6 +100,21 @@ def link_mentions_multi(
             ),
         )
     )
+
+
+def route(
+    validated: DataFrame,
+    xref_edges: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy = Strategy.MIXTURE,
+) -> DataFrame:
+    """Candidate generation + tie-break routing (SURVEY.md §2.8 rules
+    1-4) over `validate`'s output → one row per mention: idx, raw_id,
+    ns, label, reason (NULL = converted), cand_default (the
+    default-namespace candidates; [raw_id] when the mention is in the
+    default namespace) and aliases (the other candidates)."""
+    all_ns: list[str] = sorted({ns for t in types.values() for ns in t.choices})
+
     # ---- pre-aggregated candidate map + ONE 1:1 broadcast join -------
     # The round-1 shape collected 22 per-namespace ARRAYS per mention
     # (allocation/GC storm); rounds 2-4 joined mentions against the
@@ -133,12 +150,8 @@ def link_mentions_multi(
     # twice). Invalid rows ride the same broadcast probe — their
     # routing columns are garbage gated off by format_reason, which
     # takes precedence in the reason coalesce below.
-    m = df.select(
-        "idx",
-        F.col("id").alias("raw_id"),
-        "ns",
-        F.col("label").alias("mlabel"),
-        "format_reason",
+    m = validated.select(
+        "idx", F.col("id").alias("raw_id"), "ns", "label", "format_reason"
     )
     joined = m.join(F.broadcast(emap), m.raw_id == emap.src_curie, "left")
 
@@ -153,7 +166,7 @@ def link_mentions_multi(
         "idx",
         "raw_id",
         "ns",
-        "mlabel",
+        "label",
         "format_reason",
         *[
             F.coalesce(F.col("xmap")[ns]["cnt"], F.lit(0)).alias(f"c_{i}")
@@ -173,18 +186,7 @@ def link_mentions_multi(
         """sorted candidate set in ``ns`` ([] when unmapped)."""
         return F.col(f"a_{ns_i[ns]}")
 
-    def _mcase(fn) -> Column:
-        """when(mlabel == t, fn(otype)) ladder (pre-rename twin of
-        `_label_case`)."""
-        out = None
-        for tname, otype in types.items():
-            b = F.when(F.col("mlabel") == tname, fn(otype))
-            out = b if out is None else out.when(
-                F.col("mlabel") == tname, fn(otype)
-            )
-        return out
-
-    ldefault = _mcase(lambda o: F.lit(o.default))
+    ldefault = _label_case(types, lambda o: F.lit(o.default))
 
     def _sum(exprs: list[Column]) -> Column:
         out = exprs[0]
@@ -194,12 +196,12 @@ def link_mentions_multi(
 
     # n_hits counts distance-1 neighbours in the MENTION's type's
     # namespaces only (per-type "No results found" semantics)
-    n_hits = _mcase(lambda o: _sum([sz(ns) for ns in o.choices]))
-    cand_default_raw = _mcase(lambda o: cands(o.default))
+    n_hits = _label_case(types, lambda o: _sum([sz(ns) for ns in o.choices]))
+    cand_default_raw = _label_case(types, lambda o: cands(o.default))
     # non-default, non-own candidates of the row's type (sorted set —
     # each per-ns set is sorted, the flatten is re-sorted after dedup)
-    alias_collected = _mcase(
-        lambda o: F.sort_array(
+    alias_collected = _label_case(
+        types, lambda o: F.sort_array(
             F.array_distinct(
                 F.flatten(
                     F.array(
@@ -233,14 +235,16 @@ def link_mentions_multi(
 
     # routing predicates: a candidate count in any non-own namespace
     # of the row's type > 1
-    multi_default = ~own_is_default & (_mcase(lambda o: sz(o.default)) > 1)
+    multi_default = ~own_is_default & (
+        _label_case(types, lambda o: sz(o.default)) > 1
+    )
 
     def _greatest(exprs: list[Column]) -> Column:
         return exprs[0] if len(exprs) == 1 else F.greatest(*exprs)
 
     any_multi = (
-        _mcase(
-            lambda o: _greatest(
+        _label_case(
+            types, lambda o: _greatest(
                 [
                     F.when(F.col("ns") == ns, F.lit(0)).otherwise(sz(ns))
                     for ns in o.choices
@@ -260,16 +264,40 @@ def link_mentions_multi(
             F.lit(R_UNIQUE_MULTI),
         )
     )
-    wide = joined.select(
+    return joined.select(
         "idx",
         "raw_id",
         "ns",
-        F.col("mlabel").alias("label"),
+        "label",
         F.coalesce(F.col("format_reason"), route_reason).alias("reason"),
         default_arr.alias("cand_default"),
         alias_arr.alias("aliases"),
     )
 
+
+def format_rows(
+    validated: DataFrame,
+    wide: DataFrame,
+    terms: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy = Strategy.MIXTURE,
+) -> tuple[DataFrame, DataFrame]:
+    """Raw-record join, metadata enrich and output routing (SURVEY.md
+    §2.8 rules 5-7, ontology_formatter.py:675-771) over `validate`'s
+    and `route`'s outputs → (formatted, failed_formatted) with
+    FORMATTED_COLUMNS / FAILED_COLUMNS.
+
+    - raw-record join: every row joins back to the FIRST input row
+      bearing its (label, raw id) (get_raw_record first-row-wins,
+      of.py:604-605);
+    - routing: default id missing → keep the raw id; unique →
+      canonical id, resource stays the RAW record's (of.py:734), label
+      forced to the ontology type (of.py:735); failed ids are rescued
+      iff prefix == default OR strategy MIXTURE (of.py:754-763);
+    - xrefs = alias ids (every non-default namespace candidate, own
+      namespace included — get_alias_ids, of.py:625-641) ∪ metadata
+      xrefs ∪ input xrefs (`format_stage.metadata_exprs`).
+    """
     # ---- records: first input row per (label, id) --------------------
     # min_by per column, not a row_number window: the agg combines
     # map-side (no full shuffle of losers) — the first-row-wins lookup
@@ -279,7 +307,7 @@ def link_mentions_multi(
     # aggregate expressions are prunable — a consumer that only reads
     # r_label/r_xrefs (the lazy triples pipeline after its projection)
     # aggregates 2 strings instead of 9.
-    records = df.groupBy(F.col("label").alias("r_key_label"), "id").agg(
+    records = validated.groupBy(F.col("label").alias("r_key_label"), "id").agg(
         *[
             F.min_by(
                 F.coalesce(F.col(c), F.lit("")), F.col("idx")
@@ -299,11 +327,6 @@ def link_mentions_multi(
         "canonical",
         F.when(F.size("cand_default") == 1, F.element_at("cand_default", 1)),
     )
-    from ontology_matcher_spark.operators.format_stage import (
-        metadata_exprs,
-        metadata_table,
-    )
-
     # metadata key = canonical when resolved, else the RAW id: the
     # reference fetches metadata per QUERY and applies it even to rows
     # with no default mapping (format_by_metadata runs before the
@@ -341,17 +364,21 @@ def link_mentions_multi(
     )
 
     default_of_label = _label_case(types, lambda o: F.lit(o.default))
-    rescue = (
-        F.substring_index("raw_id", ":", 1) == default_of_label
+    # null-safe: a NULL id has no prefix, so under UNIQUE it fails
+    # with its "Invalid id format" reason (as in the oracle)
+    rescue = F.coalesce(
+        F.substring_index("raw_id", ":", 1) == default_of_label, F.lit(False)
     ) | F.lit(strategy == Strategy.MIXTURE)
 
     # converted rows emit the metadata-formatted columns; rescued
-    # failures emit the raw-record passthrough (identical to the
-    # round-5 rescued branch — raw_id always "")
+    # failures emit the raw-record passthrough with raw_id "" (a NULL
+    # id joins no record, so its label falls back to the mention's)
     formatted = rows.where(is_conv | rescue).select(
         F.when(resolved, F.col("canonical")).otherwise(F.col("raw_id")).alias("id"),
         F.when(is_conv, F.col("o_name")).otherwise(F.col("r_name")).alias("name"),
-        F.when(resolved, F.col("label")).otherwise(F.col("r_label")).alias("label"),
+        F.when(resolved, F.col("label"))
+        .otherwise(F.coalesce(F.col("r_label"), F.col("label")))
+        .alias("label"),
         F.col("r_resource").alias("resource"),
         F.when(is_conv, F.col("o_description"))
         .otherwise(F.col("r_description"))
@@ -377,3 +404,18 @@ def link_mentions_multi(
         "reason",
     )
     return formatted, failed_formatted
+
+
+def link_mentions_multi(
+    mentions: DataFrame,
+    xref_edges: DataFrame,
+    terms: DataFrame,
+    types: dict[str, OntologyType],
+    strategy: Strategy = Strategy.MIXTURE,
+) -> tuple[DataFrame, DataFrame]:
+    """Mixed-label mention table → (formatted, failed_formatted) in one
+    dataflow pass. Only rows whose label is a key of ``types`` are
+    linked; the others are dropped."""
+    df = validate(mentions.where(F.col("label").isin(list(types))), types)
+    wide = route(df, xref_edges, types, strategy)
+    return format_rows(df, wide, terms, types, strategy)

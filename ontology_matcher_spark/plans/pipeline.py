@@ -1,11 +1,12 @@
 """The end-to-end KG-construction plan (SURVEY.md §7 architecture).
 
 docs ──[1] mention_detect──┐
-mentions TSV ──[2] validate─┤
-                            ├─[3] candidate broadcast join
-ontology dicts (broadcast) ─┘       │
-                            [4] tie-break routing (§2.8 rules 1-4)
-                            [5] metadata enrich + format (rules 5-7)
+mentions TSV ───────────────┤
+                            ├─[2-5] link_mentions_multi, one pass for
+ontology dicts (broadcast) ─┘   every type (operators/link_multi.py):
+                                validate → candidate broadcast join →
+                                tie-break routing (§2.8 rules 1-4) →
+                                metadata enrich + format (rules 5-7)
                             [6] CC canonicalize (large-star/small-star)
                             [7] triples materialize (partitioned)
 
@@ -36,10 +37,7 @@ from ontology_matcher_spark.ontology_types import (
     OntologyType,
     Strategy,
 )
-from ontology_matcher_spark.operators.candidates import generate_candidates
-from ontology_matcher_spark.operators.canonicalize import canonical_assignment
-from ontology_matcher_spark.operators.format_stage import format_output
-from ontology_matcher_spark.operators.validate import validate_mentions
+from ontology_matcher_spark.operators.link_multi import link_mentions_multi
 
 
 def link_mentions(
@@ -49,12 +47,13 @@ def link_mentions(
     otype: OntologyType,
     strategy: Strategy = Strategy.MIXTURE,
 ) -> tuple[DataFrame, DataFrame]:
-    """Stages 2-5: mention table → (formatted, failed_formatted)."""
-    v = validate_mentions(mentions, otype)
-    cands = generate_candidates(
-        v.where(F.col("format_reason").isNull()), xref_edges, otype, strategy
+    """Stages 2-5 for one entity type: mention table → (formatted,
+    failed_formatted). The label column is ignored: every row is
+    linked as ``otype`` (the reference's per-type command)."""
+    m = mentions.withColumn("label", F.lit(otype.type))
+    return link_mentions_multi(
+        m, xref_edges, terms, {otype.type: otype}, strategy
     )
-    return format_output(cands, v, terms, otype, strategy)
 
 
 def xref_pairs(formatted: DataFrame) -> DataFrame:
@@ -65,70 +64,17 @@ def xref_pairs(formatted: DataFrame) -> DataFrame:
     ).where(F.col("src") != F.col("dst"))
 
 
-def build_triples(
-    formatted: DataFrame,
-    terms: DataFrame,
-    otype: OntologyType,
-    canon: DataFrame | None = None,
-) -> DataFrame:
-    """Stage 6+7: formatted output → (subj, pred, obj, label, src).
-
-    - mention → canonical-entity links (skos:exactMatch), canonical
-      chosen per xref-connected component (pass a shared ``canon``
-      node→canonical map to reuse ONE global CC across entity types —
-      see canonical_assignment_by_label);
-    - entity → xref member edges;
-    - term → parent is-a edges.
-    """
-    pairs = xref_pairs(formatted)
-    if canon is None:
-        canon = canonical_assignment(pairs, otype.default)  # node → canonical
-
-    mention_links = formatted.join(canon, formatted.id == canon.node, "left").select(
-        F.when(F.col("raw_id") != "", F.col("raw_id"))
-        .otherwise(F.col("id"))
-        .alias("subj"),
-        F.lit("skos:exactMatch").alias("pred"),
-        F.coalesce(F.col("canonical"), F.col("id")).alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("linker").alias("src"),
-    )
-    xref_triples = pairs.select(
-        F.col("src").alias("subj"),
-        F.lit("xref").alias("pred"),
-        F.col("dst").alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("linker").alias("src"),
-    )
-    isa_triples = terms.where(
-        (F.col("label") == otype.type) & (F.col("parent_curie") != "")
-    ).select(
-        F.col("curie").alias("subj"),
-        F.lit("is-a").alias("pred"),
-        F.col("parent_curie").alias("obj"),
-        F.lit(otype.type).alias("label"),
-        F.lit("dictionary").alias("src"),
-    )
-    # ONE distinct after the union (disjoint `pred` literals per
-    # branch ⇒ identical row set, 1 exchange instead of 3 — guide §2.4)
-    return (
-        mention_links.unionByName(xref_triples)
-        .unionByName(isa_triples)
-        .distinct()
-    )
-
-
 def build_triples_multi(
     formatted: DataFrame,
     terms: DataFrame,
     labels: list[str],
     canon: DataFrame,
 ) -> DataFrame:
-    """Stage 6+7 over a MIXED-label formatted table in one plan —
-    the single-pass counterpart of per-type build_triples (the mention
-    table and formatted output are each scanned once for all entity
-    types; at 10^12 docs the per-type loop's five scans are the
-    bottleneck, not the compute)."""
+    """Stage 6+7 over a MIXED-label formatted table in one plan →
+    (subj, pred, obj, label, src): mention → canonical-entity links
+    (skos:exactMatch, canonical per xref-connected component from
+    ``canon``), entity → xref member edges, and term → parent is-a
+    edges. The formatted output is scanned once for all entity types."""
     pairs = formatted.select(
         F.col("id").alias("src"),
         "label",
@@ -308,9 +254,6 @@ def build_pipeline_lazy(
     # times and its five concurrent jobs' serial tails capped scaling
     # efficiency at 0.19. formatted feeds BOTH the CC pass and the
     # triple build → one materialization.
-    from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-
-    mentions = mentions.where(F.col("label").isin(tnames))
     formatted = link_mentions_multi(
         mentions, edges, terms, sel_types, strategy
     )[0]
@@ -540,8 +483,6 @@ def run_pipeline(
         canonical_assignment_by_label,
     )
 
-    from ontology_matcher_spark.operators.link_multi import link_mentions_multi
-
     tnames = types or list(ONTOLOGY_TYPES)
     sel_types = {t: ONTOLOGY_TYPES[t] for t in tnames}
 
@@ -551,11 +492,7 @@ def run_pipeline(
     formatted = run.materialize(
         "formatted",
         lambda: link_mentions_multi(
-            mentions.where(F.col("label").isin(tnames)),
-            edges,
-            terms,
-            sel_types,
-            strategy,
+            mentions, edges, terms, sel_types, strategy
         )[0],
         partition_by=["label"],
     )

@@ -34,15 +34,19 @@ from ontology_matcher_spark.ontology_types import (
     DISEASE,
     GENE,
     METABOLITE,
+    ONTOLOGY_TYPES,
+    Strategy,
 )
 from ontology_matcher_spark.operators.candidates import generate_candidates
+from ontology_matcher_spark.operators.link_multi import link_mentions_multi
 from ontology_matcher_spark.operators.validate import validate_mentions
 from ontology_matcher_spark.oracle import (
+    R_BAD_FORMAT,
     R_BAD_PREFIX,
     R_MULTI,
     R_NO_RESULTS,
 )
-from ontology_matcher_spark.schemas import MENTIONS, XREF_EDGES
+from ontology_matcher_spark.schemas import MENTIONS, ONTOLOGY_TERMS, XREF_EDGES
 
 
 def _mentions_df(spark, ids: list[str], label: str):
@@ -193,3 +197,56 @@ def test_reference_accepted_namespaces_convert(spark, otype, raw, target):
     rows = fmt.select("id", "raw_id").collect()
     assert [(r["id"], r["raw_id"]) for r in rows] == [(target, raw)]
     assert failed.count() == 0
+
+
+# ---- NULL ids and out-of-config labels (single-pass linking) ---------
+def _probe(spark, strategy):
+    """A Disease mention that converts, a Disease mention with a NULL
+    id, and the same CURIE under a label outside the type config
+    (``Pathway``) and under a NULL label."""
+    rows = [
+        ("DOID:7402", "n1", "Disease", "r", "", "", "", "", ""),
+        (None, "n2", "Disease", "r", "", "", "", "", ""),
+        ("DOID:7402", "n3", "Pathway", "r", "", "", "", "", ""),
+        ("DOID:7402", "n4", None, "r", "", "", "", "", ""),
+    ]
+    fmt, failed = link_mentions_multi(
+        spark.createDataFrame(rows, MENTIONS),
+        _edges_df(spark, [("DOID:7402", "MONDO:0005247")], "Disease"),
+        spark.createDataFrame([], ONTOLOGY_TERMS),
+        ONTOLOGY_TYPES,
+        strategy,
+    )
+    return (
+        [tuple(r) for r in fmt.select("id", "label", "raw_id").collect()],
+        [tuple(r) for r in failed.select("id", "label", "reason").collect()],
+    )
+
+
+def test_rescued_null_id_keeps_mention_label(spark):
+    """MIXTURE rescues a NULL-id mention into formatted; it joins no
+    raw record, so its label must fall back to the mention's label
+    (the oracle emits the type name there), not NULL."""
+    fmt, failed = _probe(spark, Strategy.MIXTURE)
+    assert (None, "Disease", "") in fmt
+    assert (None, None, "") not in fmt
+    assert failed == []
+
+
+def test_unique_null_id_routes_to_failed(spark):
+    """Under UNIQUE a NULL id is not rescued (it has no prefix): it
+    must land in the failed side-channel with "Invalid id format",
+    as in oracle.match, instead of vanishing from both outputs."""
+    fmt, failed = _probe(spark, Strategy.UNIQUE)
+    assert failed == [(None, "Disease", R_BAD_FORMAT)]
+    assert all(r[0] is not None for r in fmt)
+
+
+@pytest.mark.parametrize("strategy", [Strategy.MIXTURE, Strategy.UNIQUE])
+def test_out_of_config_labels_not_linked(spark, strategy):
+    """Rows whose label is not a key of the type config (``Pathway``,
+    NULL) are not linked: no formatted row comes from them."""
+    fmt, _ = _probe(spark, strategy)
+    assert ("MONDO:0005247", "Disease", "DOID:7402") in fmt
+    assert not any(r[0] == "DOID:7402" for r in fmt)
+    assert all(r[1] == "Disease" for r in fmt)
